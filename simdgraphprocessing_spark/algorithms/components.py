@@ -1,11 +1,15 @@
-"""Connected components: min-label propagation on the superstep
-driver (exact at convergence), instantiating the reference's
+"""Connected components: min-label propagation on the shared gather
+superstep (exact at convergence), instantiating the reference's
 BFS-frontier template (``apps/n_path.cpp:58-83``) with label state.
 
 new_label(v) = min(label(v), min_{u ∈ N(v)} label(u)); stop when no
 label changed. Converges in O(diameter) supersteps on the symmetrized
-edge table; each superstep is one join (edges pre-partitioned by src,
-exchange reused) + one groupBy(dst) shuffle.
+edge table. Each superstep is one gather
+(:func:`simdgraphprocessing_spark.iteration.gather`): the labels join
+the checkpointed edges on ``src`` (broadcast below the session's
+broadcast threshold), and the messages plus each vertex's own label
+go through one ``groupBy(id).min``, which also flags the labels that
+changed; the driver counts those from the materialised state.
 
 Scale note: on huge, high-diameter graphs the large-star/small-star
 algorithm (Kiveris et al., "Connected Components in MapReduce") cuts
@@ -20,7 +24,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from simdgraphprocessing_spark.iteration import IterationResult, run_supersteps
+from simdgraphprocessing_spark.iteration import (
+    IterationResult,
+    count_changed,
+    gather,
+    gather_plan,
+    run_supersteps,
+)
 
 
 def connected_components(
@@ -34,46 +44,27 @@ def connected_components(
     ``edges`` must be symmetrized (both directions present), as
     :func:`simdgraphprocessing_spark.graph.normalize_edges` produces.
     """
-    spark = edges.sparkSession
-    edges = edges.select("src", "dst").repartition("src").persist()
-    vertices = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    init = vertices.select("id", F.col("id").alias("component"))
+    plan = gather_plan(edges)
+    init = plan.vtab.select("id", F.col("id").alias("component"))
 
     def step(state: DataFrame, k: int) -> tuple[DataFrame, dict]:
-        nbr_min = (
-            edges.join(
-                state.select(F.col("id").alias("src"), F.col("component").alias("c"))
-                .hint("shuffle_hash"),  # V-sized side builds the hash; no E re-sort
-                "src",
-            )
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("c").alias("nbr_min"))
+        c = F.col("component")
+        new = gather(
+            plan, state, {"c": c}, {"c": c, "old": c},
+            [F.min("c").alias("component"), (F.min("c") < F.max("old")).alias("_chg")],
         )
-        new = (
-            state.join(nbr_min, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
-                ).alias("component"),
-                (F.col("nbr_min") < F.col("component")).alias("_chg"),
-            )
-        )
-        changed = new.filter(F.col("_chg")).count()
-        return new.drop("_chg"), {"changed": int(changed)}
+        return new, plan.record()
 
     result = run_supersteps(
-        spark,
+        edges.sparkSession,
         init,
         step,
         max_iterations=max_iterations,
         converged=lambda m: m.get("changed", 1) == 0,
         checkpoint_dir=checkpoint_dir,
         checkpoint_every=checkpoint_every,
+        measure=count_changed,
     )
-    edges.unpersist()
+    plan.close()
+    result.state = result.state.select("id", "component")
     return result

@@ -1,7 +1,7 @@
-"""Synchronous label propagation (community detection) on the
-superstep driver.
+"""Synchronous label propagation (community detection) on the shared
+gather superstep.
 
-Semantics (pinned by the numpy oracle in tests/test_labelprop.py,
+Semantics (pinned by the numpy oracle in tests/test_algorithms.py,
 deterministic by construction):
 
 * labels start as vertex ids;
@@ -14,9 +14,15 @@ deterministic by construction):
   (synchronous LPA can oscillate on bipartite structures, hence the
   iteration cap).
 
-Each superstep: edges ⋈ labels on src → count per (dst, label) →
-argmax via max_by over a (count, -label) struct — two shuffles, all
-JVM-side.
+Each superstep is one gather
+(:func:`simdgraphprocessing_spark.iteration.gather`): the labels join
+the checkpointed edges on ``src`` (broadcast below the session's
+broadcast threshold), and the neighbour labels plus each vertex's own
+row go through one ``groupBy(id)`` whose ``mode(l, deterministic)``
+returns the most frequent label, the smallest on a tie. The own row
+carries the old label in a column ``mode`` never reads, so it is not
+a vote; it is the fallback for an isolated vertex and the baseline the
+``changed`` flag compares against.
 """
 
 from __future__ import annotations
@@ -24,7 +30,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from simdgraphprocessing_spark.iteration import IterationResult, run_supersteps
+from simdgraphprocessing_spark.iteration import (
+    IterationResult,
+    count_changed,
+    gather,
+    gather_plan,
+    run_supersteps,
+)
 
 
 def label_propagation(
@@ -34,49 +46,27 @@ def label_propagation(
     checkpoint_every: int = 2,
 ) -> IterationResult:
     """State: (id, label). ``edges`` symmetrized."""
-    spark = edges.sparkSession
-    edges = edges.select("src", "dst").repartition("src").persist()
-    vertices = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    init = vertices.select("id", F.col("id").alias("label"))
+    plan = gather_plan(edges)
+    init = plan.vtab.select("id", F.col("id").alias("label"))
 
     def step(state: DataFrame, k: int) -> tuple[DataFrame, dict]:
-        counts = (
-            edges.join(
-                state.select(F.col("id").alias("src"), F.col("label").alias("l"))
-                .hint("shuffle_hash"),  # V-sized side builds the hash; no E re-sort
-                "src",
-            )
-            .groupBy(F.col("dst").alias("id"), F.col("l"))
-            .agg(F.count("*").alias("cnt"))
+        label = F.coalesce(F.mode("l", True), F.max("old"))
+        new = gather(
+            plan, state, {"l": F.col("label")}, {"old": F.col("label")},
+            [label.alias("label"), (label != F.max("old")).alias("_chg")],
         )
-        best = counts.groupBy("id").agg(
-            F.max_by(F.col("l"), F.struct(F.col("cnt"), (-F.col("l")).alias("nl"))).alias(
-                "new_label"
-            )
-        )
-        new = (
-            state.join(best, "id", "left")
-            .select(
-                "id",
-                F.coalesce(F.col("new_label"), F.col("label")).alias("label"),
-                (F.coalesce(F.col("new_label"), F.col("label")) != F.col("label")).alias("_chg"),
-            )
-        )
-        changed = new.filter(F.col("_chg")).count()
-        return new.drop("_chg"), {"changed": int(changed)}
+        return new, plan.record()
 
     result = run_supersteps(
-        spark,
+        edges.sparkSession,
         init,
         step,
         max_iterations=max_iterations,
         converged=lambda m: m.get("changed", 1) == 0,
         checkpoint_dir=checkpoint_dir,
         checkpoint_every=checkpoint_every,
+        measure=count_changed,
     )
-    edges.unpersist()
+    plan.close()
+    result.state = result.state.select("id", "label")
     return result

@@ -1,73 +1,45 @@
-"""PageRank on the superstep driver.
+"""PageRank on the shared gather superstep.
 
 The reference has no PageRank (its closest structure is the BFS
 gather loop, ``apps/n_path.cpp:58-83``); semantics are pinned by our
-numpy power-iteration oracle (tests/test_pagerank.py):
+numpy power-iteration oracle (tests/test_algorithms.py):
 
     r_{t+1}(v) = (1-d)/N + d · ( Σ_{u→v} r_t(u)/outdeg(u)
                                  + dangling_mass_t / N )
 
 with d = 0.85, r_0 = 1/N, dangling mass redistributed uniformly.
 
-Plan per superstep (all JVM-side, zero Python in the loop):
-  ranks ⋈ out_degrees (broadcast- or co-partitioned hash join on id)
-  → contribs = edges ⋈ ranks on src (edges pre-partitioned by src;
-    the exchange is reused every iteration)
-  → groupBy(dst).sum (THE shuffle; map-side partial agg halves it)
-  → full-outer with vertex table for zero-indegree vertices.
+Plan per superstep (all JVM-side, zero Python in the loop; see
+:mod:`simdgraphprocessing_spark.iteration`): the ``(id, rank/outdeg)``
+state joins the checkpointed edges on ``src`` (broadcast below the
+session's broadcast threshold, shuffle_hash above it); the messages
+``(dst, w)`` and each vertex's own row ``(id, outdeg, old rank)`` go
+through one ``groupBy(id)`` whose ``sum(w)`` gives the new rank. The
+own row keeps zero-indegree vertices in the state without a vertex
+table join.
 
-Convergence: L1 delta via ``agg(sum(abs(new-old)))`` — one scalar to
-the driver per superstep, like the reference's cardinality test.
+Convergence (``tol > 0``): each new state carries ``|new - old|``, and
+the driver sums it from the materialised rows — one V-row scalar per
+superstep, like the reference's cardinality test.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from simdgraphprocessing_spark.iteration import IterationResult, run_supersteps
+from simdgraphprocessing_spark.iteration import (
+    GatherPlan,
+    IterationResult,
+    gather,
+    gather_plan,
+    run_supersteps,
+)
 
-
-@dataclass
-class ShufflePlanContext:
-    """The shuffle plan's one-time layout: src-partitioned persisted
-    edges, the persisted (id, outdeg) vertex table, V, and whether any
-    vertex dangles. Building it costs three actions (V count, vtab
-    materialize, dangling probe); ``pagerank_auto`` runs the shuffle
-    plan twice per call (probe + post-fallback remainder), so it
-    builds this once and threads it through both — the supersteps
-    themselves are unchanged."""
-
-    edges: DataFrame
-    vtab: DataFrame
-    n: int
-    has_dangling: bool
-
-    def close(self) -> None:
-        self.edges.unpersist()
-        self.vtab.unpersist()
-
-
-def build_shuffle_plan(edges: DataFrame) -> ShufflePlanContext:
-    edges = edges.select("src", "dst").repartition("src").persist()
-    vertices = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    out_deg = edges.groupBy(F.col("src").alias("id")).agg(
-        F.count("*").alias("outdeg")
-    )
-    # (id, outdeg) for every vertex; dangling => outdeg null
-    vtab = vertices.join(out_deg, "id", "left").persist()
-    n = vtab.count()
-    # dangling-mass handling needs a per-superstep driver scalar; skip
-    # the action entirely when the graph has no dangling vertices
-    # (always true for symmetrized graphs)
-    has_dangling = vtab.filter(F.col("outdeg").isNull()).limit(1).count() > 0
-    return ShufflePlanContext(edges, vtab, n, has_dangling)
+# the prebuilt layout a caller may build once and pass to several
+# ``pagerank(plan=...)`` calls; the names predate the broadcast side
+ShufflePlanContext = GatherPlan
+build_shuffle_plan = gather_plan
 
 
 def pagerank(
@@ -77,7 +49,6 @@ def pagerank(
     tol: float = 1e-10,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 1,
-    initial_ranks: DataFrame | None = None,
     plan: ShufflePlanContext | None = None,
 ) -> IterationResult:
     """Returns IterationResult whose state is ``(id, rank)``.
@@ -85,87 +56,45 @@ def pagerank(
     ``edges`` is a directed edge table (src, dst); for undirected
     graphs pass the symmetrized table. Vertices = src ∪ dst.
 
-    ``initial_ranks``: optional ``(id, rank)`` table to continue a
-    power iteration from (``pagerank_auto``'s strategy hand-off uses
-    this so no probed superstep is ever discarded). Vertices absent
-    from it start at 1/N; the update rule is state-free, so resuming
-    from superstep k here is bit-compatible with having run k
-    supersteps in this plan modulo float reduction order.
-
-    ``plan``: optional prebuilt :class:`ShufflePlanContext`. When
-    given, the caller owns its lifetime (no unpersist here) and
-    ``edges`` is ignored in favor of the plan's persisted copy.
+    ``plan``: optional prebuilt :func:`build_shuffle_plan`. When
+    given, the caller owns its lifetime (no ``close()`` here) and
+    ``edges`` is ignored in favor of the plan's checkpointed copy.
     """
-    spark = edges.sparkSession
     own_plan = plan is None
     if own_plan:
-        plan = build_shuffle_plan(edges)
-    edges, vtab, n, has_dangling = plan.edges, plan.vtab, plan.n, plan.has_dangling
-
+        plan = gather_plan(edges)
+    n = plan.n
     # outdeg rides inside the state so the superstep needs no extra
     # vertex-table join to compute rank/outdeg
-    if initial_ranks is not None:
-        init = vtab.join(
-            initial_ranks.select("id", F.col("rank").alias("r0")), "id", "left"
-        ).select(
-            "id", F.coalesce(F.col("r0"), F.lit(1.0 / n)).alias("rank"), "outdeg"
-        )
-    else:
-        init = vtab.select("id", F.lit(1.0 / n).alias("rank"), "outdeg")
-
+    init = plan.vtab.select("id", F.lit(1.0 / n).alias("rank"), "outdeg")
     compute_delta = tol > 0
 
     def step(state: DataFrame, k: int) -> tuple[DataFrame, dict]:
         dangling = 0.0
-        if has_dangling:
-            dangling = (
-                state.filter(F.col("outdeg").isNull())
-                .agg(F.sum("rank"))
-                .collect()[0][0]
-                or 0.0
-            )
-        # the E-sized join: edges stay put (pre-partitioned by src,
-        # persisted); the V-sized rank side shuffles to it and builds a
-        # hash table (shuffle_hash — no 19M-row re-sort per superstep)
-        contribs = (
-            edges.join(
-                state.select(
-                    F.col("id").alias("src"), (F.col("rank") / F.col("outdeg")).alias("w")
-                ).hint("shuffle_hash"),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("w").alias("msum"))
-        )
+        if plan.has_dangling:
+            dangling = state.filter(F.col("outdeg").isNull()).agg(F.sum("rank")).first()[0] or 0.0
         base = (1.0 - damping) / n + damping * dangling / n
-        new = (
-            vtab.join(contribs.hint("shuffle_hash"), "id", "left")
-            .select(
-                "id",
-                (F.lit(base) + F.lit(damping) * F.coalesce(F.col("msum"), F.lit(0.0))).alias("rank"),
-                "outdeg",
-            )
-        )
-        m = {"dangling_mass": float(dangling)}
+        rank = F.lit(base) + F.lit(damping) * F.coalesce(F.sum("w"), F.lit(0.0))
+        keep = {"outdeg": F.col("outdeg")}
+        aggs = [rank.alias("rank"), F.max("outdeg").alias("outdeg")]
         if compute_delta:
-            # convergence measure costs an extra V-join + agg; skipped
-            # for fixed-iteration runs (tol <= 0)
-            delta = (
-                new.join(state.select("id", F.col("rank").alias("old")), "id")
-                .agg(F.sum(F.abs(F.col("rank") - F.col("old"))).alias("d"))
-                .collect()[0]["d"]
-            )
-            m["l1_delta"] = float(delta)
-        return new, m
+            keep["old"] = F.col("rank")
+            aggs.append(F.abs(rank - F.max("old")).alias("_d"))
+        new = gather(plan, state, {"w": F.col("rank") / F.col("outdeg")}, keep, aggs)
+        return new, {**plan.record(), "dangling_mass": float(dangling)}
+
+    def measure(state: DataFrame) -> dict:
+        return {"l1_delta": float(state.agg(F.sum("_d")).first()[0])} if compute_delta else {}
 
     result = run_supersteps(
-        spark,
+        edges.sparkSession,
         init,
         step,
         max_iterations=max_iterations,
         converged=lambda m: m.get("l1_delta", 1.0) < tol,
         checkpoint_dir=checkpoint_dir,
         checkpoint_every=checkpoint_every,
+        measure=measure,
     )
     if own_plan:
         plan.close()

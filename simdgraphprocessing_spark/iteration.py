@@ -1,26 +1,44 @@
-"""Superstep driver with checkpoint/resume — the distributed
-generalization of the reference's frontier loop
-(``apps/n_path.cpp:58-83``: per-thread buffers → tree merge → global
-union → difference → convergence test).
+"""Superstep driver with checkpoint/resume, and the one gather
+superstep PageRank, connected components and label propagation share
+— the distributed generalization of the reference's frontier loop
+(``apps/n_path.cpp:58-83``: gather from one shared vertex array into
+each vertex's neighbour list → merge → convergence test).
 
-Contract: a superstep is a pure function
-``state_df -> (new_state_df, metrics_dict)``. The driver
+Gather plan (:func:`gather_plan`, built once per operator call):
 
-* persists each new state and truncates lineage (iterative DataFrame
-  plans otherwise grow without bound — the classic Spark trap),
-* checkpoints vertex state to a partitioned parquet directory
-  (Iceberg-style layout ``checkpoint_dir/superstep=K/``) together
-  with per-superstep metrics + lineage JSON (``_metrics.json``:
-  iteration number, rows, partitioning, wall seconds, custom
-  convergence measures),
-* resumes from the last *complete* superstep (one whose parquet
-  committed its ``_SUCCESS`` marker and metrics file) after a crash —
-  ``run()`` with the same ``checkpoint_dir`` just continues.
+* the ``(src, dst)`` edge copy, repartitioned by ``src`` and
+  ``localCheckpoint``-ed, so every superstep plan starts from a short
+  lineage instead of the whole corpus → edges → degree-rank plan;
+* the ``(id, outdeg)`` vertex table, also checkpointed, and V;
+* the join the vertex state takes onto the edges: ``broadcast`` while
+  V·16 B fits the session's ``spark.sql.autoBroadcastJoinThreshold``,
+  ``shuffle_hash`` above it (the partition-or-not choice; the figure,
+  the threshold and the choice go into every superstep's metrics).
 
-At 100 TB the state table is large; checkpointing every K supersteps
-(``checkpoint_every``) trades recompute for IO exactly like Spark's
-own ``localCheckpoint`` policy, but survives driver loss because it
-is real parquet, not executor-cached blocks.
+Gather superstep (:func:`gather`): the state joins the edges on
+``src``; the messages, unioned with each vertex's own row (which
+carries its old value), go through ONE ``groupBy(id)`` aggregate —
+``min`` for CC, ``sum`` for PageRank, ``mode`` for LP. Below the
+threshold that is the superstep's only shuffle exchange.
+
+Driver contract: a superstep is a function
+``(state_df, k) -> (new_state_df, metrics_dict)`` that builds a lazy
+plan. The driver
+
+* materialises each new state exactly once — ``localCheckpoint``
+  in memory, or a parquet write + re-read at a durable checkpoint —
+  which also truncates lineage (iterative plans otherwise grow
+  without bound),
+* THEN computes the convergence measure (``measure``) from the
+  materialised V rows, so the E-sized plan never runs twice,
+* checkpoints vertex state to ``checkpoint_dir/superstep=K/`` every
+  ``checkpoint_every`` supersteps, at ``max_iterations`` and at the
+  converged superstep, with per-superstep metrics + lineage JSON
+  (``_metrics.json``),
+* resumes from the last *complete* superstep (parquet ``_SUCCESS``
+  marker and metrics file both present) after a crash — ``run()``
+  with the same ``checkpoint_dir`` just continues, and returns at once
+  when that superstep had converged.
 """
 
 from __future__ import annotations
@@ -31,9 +49,14 @@ import time
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 Superstep = Callable[[DataFrame, int], tuple[DataFrame, dict]]
+
+# bytes per vertex-state row the broadcast decision charges: an int64
+# id plus one 8-byte value
+STATE_ROW_BYTES = 16
 
 
 @dataclass
@@ -42,9 +65,6 @@ class IterationResult:
     iterations: int
     metrics: list[dict] = field(default_factory=list)
     resumed_from: int | None = None
-    # set by strategy-probing wrappers (pagerank_auto): which physical
-    # plan ran and the measured probe walls that decided it
-    strategy_probe: dict | None = None
 
 
 def _local_ckpt_jrdd(df: DataFrame):
@@ -68,6 +88,82 @@ def _local_ckpt_jrdd(df: DataFrame):
     except Exception:  # py4j surface moved — degrade to cleaner-based GC
         pass
     return None
+
+
+def _free_local_ckpt(df: DataFrame) -> None:
+    jrdd = _local_ckpt_jrdd(df)
+    if jrdd is not None:
+        jrdd.unpersist(False)
+
+
+@dataclass
+class GatherPlan:
+    """One operator call's gather layout (see the module docstring).
+    ``vtab`` is ``(id, outdeg)`` with ``outdeg`` null for a vertex
+    without out-edges; ``close()`` frees both checkpointed copies."""
+
+    edges: DataFrame
+    vtab: DataFrame
+    n: int
+    has_dangling: bool
+    join: str  # "broadcast" or "shuffle_hash"
+    state_bytes: int
+    broadcast_threshold: int
+
+    def record(self) -> dict:
+        """The physical-plan choice and the figures that decided it."""
+        return {
+            "join": self.join,
+            "state_bytes": self.state_bytes,
+            "broadcast_threshold": self.broadcast_threshold,
+        }
+
+    def close(self) -> None:
+        _free_local_ckpt(self.edges)
+        _free_local_ckpt(self.vtab)
+
+
+def gather_plan(edges: DataFrame) -> GatherPlan:
+    """Checkpoint the edge copy and vertex table; pick the state join."""
+    spark = edges.sparkSession
+    edges = edges.select("src", "dst").repartition("src").localCheckpoint(eager=True)
+    # out-degree and the vertex set (src ∪ dst) in one aggregate
+    vtab = (
+        edges.select(F.col("src").alias("id"), F.lit(1).alias("o"))
+        .union(edges.select(F.col("dst").alias("id"), F.lit(None).cast("int").alias("o")))
+        .groupBy("id")
+        .agg(F.sum("o").alias("outdeg"))
+        .localCheckpoint(eager=True)
+    )
+    row = vtab.agg(F.count("*").alias("n"), F.count_if(F.col("outdeg").isNull()).alias("d")).first()
+    n = int(row["n"])
+    threshold = int(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold())
+    state_bytes = STATE_ROW_BYTES * n
+    join = "broadcast" if 0 <= state_bytes <= threshold else "shuffle_hash"
+    return GatherPlan(edges, vtab, n, row["d"] > 0, join, state_bytes, threshold)
+
+
+def gather(
+    plan: GatherPlan,
+    state: DataFrame,
+    send: dict[str, Column],
+    keep: dict[str, Column],
+    aggs: list[Column],
+) -> DataFrame:
+    """One gather superstep's plan. Every edge ``src -> dst`` carries
+    the ``send`` columns of ``src``'s state row to ``dst``; every
+    vertex's own row carries its ``keep`` columns (columns a row lacks
+    are null); ``aggs`` reduce both per ``id`` in a single aggregate."""
+    side = state.select(F.col("id").alias("src"), *(c.alias(k) for k, c in send.items()))
+    side = F.broadcast(side) if plan.join == "broadcast" else side.hint("shuffle_hash")
+    msgs = plan.edges.join(side, "src").select(F.col("dst").alias("id"), *send)
+    own = state.select("id", *(c.alias(k) for k, c in keep.items()))
+    return msgs.unionByName(own, allowMissingColumns=True).groupBy("id").agg(*aggs)
+
+
+def count_changed(state: DataFrame) -> dict:
+    """Convergence measure of a state carrying a boolean ``_chg``."""
+    return {"changed": state.filter(F.col("_chg")).count()}
 
 
 def _ckpt_path(checkpoint_dir: str, k: int) -> str:
@@ -95,6 +191,28 @@ def last_complete_superstep(checkpoint_dir: str) -> int | None:
     return best
 
 
+def _write_durable(
+    spark: SparkSession, df: DataFrame, path: str, state_partitions: int | None
+) -> tuple[DataFrame, int, list[dict]]:
+    """Write ``df`` to parquet at ``path`` and re-read it persisted:
+    truncates lineage AND pins state to durable storage. Returns the
+    re-read state, its row count and its per-partition lineage — one
+    manifest entry per state partition file (name + bytes), so a
+    resumed run, or an auditor, can tie every partition of superstep K
+    to the exact files superstep K+1 read."""
+    if state_partitions:
+        df = df.repartition(state_partitions)
+    df.write.mode("overwrite").parquet(path)
+    state = spark.read.parquet(path).persist()
+    n_rows = state.count()
+    lineage = [
+        {"file": f, "bytes": os.path.getsize(os.path.join(path, f))}
+        for f in sorted(os.listdir(path))
+        if f.startswith("part-") and not f.endswith(".crc")
+    ]
+    return state, n_rows, lineage
+
+
 def run_supersteps(
     spark: SparkSession,
     initial_state: DataFrame,
@@ -104,11 +222,13 @@ def run_supersteps(
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 1,
     state_partitions: int | None = None,
+    measure: Callable[[DataFrame], dict] | None = None,
 ) -> IterationResult:
     """Run ``step`` until convergence / max_iterations, checkpointing.
 
-    ``converged(metrics)`` inspects the metrics dict the step returned
-    (e.g. ``{"delta": 1e-7}``) — the driver-side convergence test the
+    ``measure(state)`` runs on each materialised new state and its
+    dict joins the step's metrics; ``converged(metrics)`` then decides
+    (e.g. ``{"changed": 0}``) — the driver-side convergence test the
     reference does with ``frontier.cardinality == 0``.
     """
     start_k = 0
@@ -131,70 +251,40 @@ def run_supersteps(
     state = state.persist()
     state.count()  # materialize
 
-    # JVM handle of the CURRENT state's localCheckpoint blocks (None
-    # when state is a plain persist or durable parquet); freed as soon
-    # as the next state is materialized
-    state_ckpt_jrdd = None
     k = start_k
     while k < max_iterations:
         t0 = time.time()
         new_state, m = step(state, k)
         k += 1
-
-        durable = checkpoint_dir and (k % checkpoint_every == 0 or k == max_iterations)
-        if durable:
-            path = _ckpt_path(checkpoint_dir, k)
-            writer = new_state.write.mode("overwrite")
-            if state_partitions:
-                writer = new_state.repartition(state_partitions).write.mode("overwrite")
-            writer.parquet(path)  # the materializing action
-            state.unpersist()
-            if state_ckpt_jrdd is not None:
-                state_ckpt_jrdd.unpersist(False)
-            state_ckpt_jrdd = None
-            # re-read: truncates lineage AND pins state to durable storage
-            new_state = spark.read.parquet(path).persist()
-            n_rows = new_state.count()
-            # per-partition lineage: one manifest entry per state
-            # partition file (name + bytes) so a resumed run — or an
-            # auditor — can tie every partition of superstep K to the
-            # exact files superstep K+1 read
-            part_files = sorted(
-                f for f in os.listdir(path)
-                if f.startswith("part-") and not f.endswith(".crc")
-            )
-            partition_lineage = [
-                {"file": f, "bytes": os.path.getsize(os.path.join(path, f))}
-                for f in part_files
-            ]
-        else:
-            # truncate lineage in-memory between durable checkpoints;
-            # eager localCheckpoint is the single materializing action
-            # (no extra count job — row count is a durable-ckpt metric)
-            new_state = new_state.localCheckpoint(eager=True)
-            state.unpersist()
-            # the new checkpoint is materialized, so the previous one's
-            # RDD-level blocks (which DataFrame.unpersist cannot reach)
-            # are dead weight — free them NOW instead of waiting for
-            # the ContextCleaner (see _local_ckpt_jrdd)
-            if state_ckpt_jrdd is not None:
-                state_ckpt_jrdd.unpersist(False)
-            state_ckpt_jrdd = _local_ckpt_jrdd(new_state)
-            n_rows = None
-            partition_lineage = None
-
-        wall = time.time() - t0
         m = dict(m)
-        m.update(
-            {
-                "superstep": k,
-                "rows": n_rows,
-                "wall_sec": round(wall, 4),
-            }
-        )
-        if partition_lineage is not None:
-            m["num_partitions"] = len(partition_lineage)
-            m["partition_lineage"] = partition_lineage
+
+        path = _ckpt_path(checkpoint_dir, k) if checkpoint_dir else None
+        durable = path is not None and (k % checkpoint_every == 0 or k == max_iterations)
+        n_rows, lineage = None, None
+        if durable:
+            new_state, n_rows, lineage = _write_durable(spark, new_state, path, state_partitions)
+        else:
+            # eager localCheckpoint is the single materializing action
+            new_state = new_state.localCheckpoint(eager=True)
+        # the new state is materialized, so the previous one is dead
+        # weight; its localCheckpoint blocks are RDD-level, which
+        # DataFrame.unpersist cannot reach (see _local_ckpt_jrdd)
+        state.unpersist()
+        _free_local_ckpt(state)
+        if measure:
+            m.update(measure(new_state))
+        if path and not durable and converged and converged(m):
+            # write the converged state too, or a resume would
+            # recompute the superstep that got here
+            ckpt = new_state
+            new_state, n_rows, lineage = _write_durable(spark, ckpt, path, state_partitions)
+            _free_local_ckpt(ckpt)
+            durable = True
+
+        m.update({"superstep": k, "rows": n_rows, "wall_sec": round(time.time() - t0, 4)})
+        if lineage is not None:
+            m["num_partitions"] = len(lineage)
+            m["partition_lineage"] = lineage
         metrics_log.append(m)
         if durable:
             with open(_metrics_path(checkpoint_dir, k), "w") as fh:

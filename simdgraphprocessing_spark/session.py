@@ -1,6 +1,7 @@
 """SparkSession construction with scale-appropriate defaults.
 
-Local-mode testing uses ``local[$SPARK_GRAFT_CPUS]``; the same configs
+Local-mode testing uses ``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs
+this process may run on); the same configs
 (AQE, Arrow, shuffle-partition sizing) are what we would submit via
 ``spark-submit --py-files`` on a multi-executor cluster.
 """
@@ -25,7 +26,7 @@ def get_spark(
     ``src/common.hpp:214-276``); Arrow is on (all kernels are
     pandas/Arrow vectorized, never per-row Python).
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

@@ -11,6 +11,7 @@ from simdgraphprocessing_spark.algorithms import (
     label_propagation,
     pagerank,
 )
+from simdgraphprocessing_spark.iteration import last_complete_superstep
 from tests.conftest import edge_df, numpy_graph, zipf_random_pairs
 
 
@@ -147,163 +148,21 @@ def test_checkpoint_resume(spark, tmp_path):
     assert all(abs(a[k] - b[k]) < 1e-12 for k in a)
 
 
-def test_pagerank_gather_matches_shuffle_and_oracle(spark):
-    from simdgraphprocessing_spark.algorithms import pagerank_gather
-
-    pairs = zipf_random_pairs(n=150)
-    n = max(max(p) for p in pairs) + 1
-    e = spark.createDataFrame(pairs, "src long, dst long")
-    A = np.zeros((n, n), dtype=np.int64)
-    for a, b in pairs:
-        A[a, b] = 1
-    got = {
-        r["id"]: r["rank"]
-        for r in pagerank_gather(e, max_iterations=25, tol=1e-12).state.collect()
-    }
-    expect = pagerank_oracle(A, iters=25, tol=1e-12)
-    shuffle = {
-        r["id"]: r["rank"]
-        for r in pagerank(e, max_iterations=25, tol=1e-12).state.collect()
-    }
-    # gather path covers the full dense range [0, n); compare where both
-    # define a vertex, and against the dense numpy oracle everywhere
-    for i in shuffle:
-        assert abs(got[i] - shuffle[i]) < 1e-9
-    got_v = np.array([got[i] for i in range(n)])
-    assert np.allclose(got_v, expect, atol=1e-6)
+SUPERSTEP_OPS = {
+    "pagerank": lambda e: pagerank(e, max_iterations=8, tol=0.0),
+    "components": lambda e: connected_components(e, max_iterations=8),
+    "labelprop": lambda e: label_propagation(e, max_iterations=8),
+}
 
 
-def test_pagerank_gather_checkpoint_resume(spark, tmp_path):
-    from simdgraphprocessing_spark.algorithms import pagerank_gather
-
-    pairs = zipf_random_pairs(n=80)
-    e = edge_df(spark, pairs)
-    ck = str(tmp_path / "prg_ck")
-    pagerank_gather(e, max_iterations=3, tol=0.0, checkpoint_dir=ck)
-    resumed = pagerank_gather(e, max_iterations=6, tol=0.0, checkpoint_dir=ck)
-    assert resumed.resumed_from == 3
-    fresh = pagerank_gather(e, max_iterations=6, tol=0.0)
-    a = {r["id"]: r["rank"] for r in resumed.state.collect()}
-    b = {r["id"]: r["rank"] for r in fresh.state.collect()}
-    assert all(abs(a[i] - b[i]) < 1e-12 for i in a)
-    # per-superstep metrics survive the resume
-    assert [m["superstep"] for m in resumed.metrics] == [1, 2, 3, 4, 5, 6]
-
-
-def test_pagerank_auto_probes_and_matches(spark):
-    """pagerank_auto's probed supersteps are REAL supersteps (shuffle
-    probe state hands off to gather via initial_ranks and back on
-    fallback), so whatever strategy path a given run takes, the final
-    ranks must match the plain shuffle plan and the decision must be
-    logged."""
-    from simdgraphprocessing_spark.algorithms import pagerank_auto
-
-    pairs = zipf_random_pairs(n=120)
-    e = edge_df(spark, pairs)
-    res = pagerank_auto(e, max_iterations=8, tol=0.0)
-    probe = res.strategy_probe
-    assert probe is not None and probe["chosen"] in ("shuffle", "gather")
-    assert probe["shuffle_min_step_sec"] > 0
-    # 8 iterations leave 6 after the probe — under the default
-    # amortization floor, so gather must not even be attempted (its
-    # ~5-superstep setup fee can't be recouped) and the gate is logged
-    assert probe["chosen"] == "shuffle"
-    assert "gather_skipped" in probe
-    assert res.iterations == 8
-    assert [m["superstep"] for m in res.metrics] == list(range(1, 9))
-    base = pagerank(e, max_iterations=8, tol=0.0)
-    got = {r["id"]: r["rank"] for r in res.state.collect()}
-    exp = {r["id"]: r["rank"] for r in base.state.collect()}
-    assert set(got) == set(exp)
-    assert all(abs(got[i] - exp[i]) < 1e-9 for i in got)
-
-
-def test_pagerank_auto_gather_keeps_slot_with_big_budget(spark):
-    """With an effectively unlimited per-step budget the gather plan
-    runs the whole remainder: chosen == "gather", no fallback, and the
-    cross-strategy continuation (shuffle steps 1-2, gather steps 3-8)
-    still reproduces the shuffle plan's ranks exactly."""
-    from simdgraphprocessing_spark.algorithms import pagerank_auto
-
-    pairs = zipf_random_pairs(n=120)
-    e = edge_df(spark, pairs)
-    res = pagerank_auto(
-        e,
-        max_iterations=8,
-        tol=0.0,
-        gather_step_budget_factor=1e9,
-        min_gather_amortization_iters=1,
-    )
-    probe = res.strategy_probe
-    assert probe["chosen"] == "gather"
-    assert probe["fallback_superstep"] is None
-    assert probe["gather_min_step_sec"] > 0
-    assert res.iterations == 8
-    base = pagerank(e, max_iterations=8, tol=0.0)
-    got = {r["id"]: r["rank"] for r in res.state.collect()}
-    exp = {r["id"]: r["rank"] for r in base.state.collect()}
-    assert all(abs(got[i] - exp[i]) < 1e-9 for i in got)
-
-
-def test_pagerank_auto_evicts_slow_gather_mid_run(spark):
-    """A zero budget makes gather's first superstep over-budget: it
-    must still COUNT (post-step check — no discarded work), then the
-    shuffle plan finishes the run from gather's rank state. The
-    composed run matches plain shuffle and records where the fallback
-    happened."""
-    from simdgraphprocessing_spark.algorithms import pagerank_auto
-
-    pairs = zipf_random_pairs(n=120)
-    e = edge_df(spark, pairs)
-    res = pagerank_auto(
-        e,
-        max_iterations=8,
-        tol=0.0,
-        gather_step_budget_factor=0.0,
-        min_gather_amortization_iters=1,
-    )
-    probe = res.strategy_probe
-    assert probe["chosen"] == "shuffle"
-    # probe(2 shuffle) + 1 counted-but-evicted gather step
-    assert probe["fallback_superstep"] == 3
-    assert res.iterations == 8
-    assert [m["superstep"] for m in res.metrics] == list(range(1, 9))
-    assert res.metrics[2].get("timeout_exceeded") is True
-    base = pagerank(e, max_iterations=8, tol=0.0)
-    got = {r["id"]: r["rank"] for r in res.state.collect()}
-    exp = {r["id"]: r["rank"] for r in base.state.collect()}
-    assert all(abs(got[i] - exp[i]) < 1e-9 for i in got)
-
-
-def test_pagerank_auto_demotes_oversized_vertex_space(spark, monkeypatch):
-    """Graphs beyond the gather plan's dense-vector cap must auto-pick
-    the shuffle plan with the demotion visible in the probe log."""
-    import importlib
-
-    from simdgraphprocessing_spark.algorithms import pagerank_auto
-
-    # the package re-exports the function under the module's name, so
-    # resolve the real module through importlib
-    pg = importlib.import_module(
-        "simdgraphprocessing_spark.algorithms.pagerank_gather"
-    )
-    monkeypatch.setattr(pg, "MAX_DENSE_VERTICES", 10)
-    pairs = zipf_random_pairs(n=120)
-    e = edge_df(spark, pairs)
-    res = pagerank_auto(
-        e, max_iterations=3, tol=0.0, min_gather_amortization_iters=1
-    )
-    assert res.strategy_probe["chosen"] == "shuffle"
-    assert res.strategy_probe["gather_min_step_sec"] is None
-    assert "gather_skipped" not in res.strategy_probe  # demoted, not gated
-
-
-def test_supersteps_free_localcheckpoint_blocks(spark):
+@pytest.mark.parametrize("op", sorted(SUPERSTEP_OPS))
+def test_supersteps_free_localcheckpoint_blocks(spark, op):
     """Each superstep's localCheckpoint must free the previous one's
     RDD-level blocks immediately — DataFrame.unpersist cannot reach
     them, and waiting for the ContextCleaner leaks one V-sized block
     per superstep (measured: superstep walls degrading 23s -> 46s on
-    an 8M-file graph until the periodic GC fired)."""
+    an 8M-file graph until the periodic GC fired). The operator's
+    checkpointed edge copy and vertex table are freed on exit too."""
     sc = spark.sparkContext
 
     def n_persistent() -> int:
@@ -312,75 +171,104 @@ def test_supersteps_free_localcheckpoint_blocks(spark):
     pairs = zipf_random_pairs(n=400, seed=11)
     edges = edge_df(spark, pairs)
     base = n_persistent()
-    res = pagerank(edges, max_iterations=8, tol=0.0)
-    # live set after the run: the final state's checkpoint block plus
-    # at most the persisted vertex/vtab helpers — NOT 8 state blocks
-    assert n_persistent() - base <= 4, (base, n_persistent())
-    assert res.iterations == 8
+    res = SUPERSTEP_OPS[op](edges)
+    # live set after the run: the final state's checkpoint block only —
+    # NOT one block per superstep, and not the edge copy or vertex table
+    assert n_persistent() - base <= 1, (base, n_persistent())
+    # PageRank runs all 8; CC and LP stop when no label changes
+    assert (res.iterations == 8) if op == "pagerank" else (res.iterations >= 2)
     res.state.unpersist()
 
 
-def test_sustained_exceeded_pure_rules():
-    """Lower-median over post-setup walls: the setup step never
-    counts, <2 post-setup samples never evict, and a single slow
-    burst among good steps never evicts (lower median = the faster
-    of two)."""
-    from simdgraphprocessing_spark.algorithms.pagerank_gather import (
-        _sustained_exceeded,
-    )
-
-    assert _sustained_exceeded([], 1.0) is False
-    assert _sustained_exceeded([9.0], 1.0) is False  # setup only
-    assert _sustained_exceeded([9.0, 5.0], 1.0) is False  # 1 sample
-    # run-6 local[8] shape: 12s sustained vs 7.3s budget -> evict
-    assert _sustained_exceeded([11.0, 12.4, 12.0], 7.3) is True
-    # run-6 local[32] shape: sub-second sustained vs 3.0s budget -> keep
-    assert _sustained_exceeded([9.0, 0.93, 0.81], 3.0) is False
-    # one steal burst among good steps -> keep (lower median)
-    assert _sustained_exceeded([9.0, 1.0, 6.0], 3.0) is False
-    assert _sustained_exceeded([9.0, 1.0, 6.0, 1.1], 3.0) is False
+def _explain(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "simple")
 
 
-def test_pagerank_gather_sustained_eviction(spark):
-    """With the catastrophic per-step budget too loose to ever trip,
-    a sustained budget of zero must evict at exactly the minimum
-    3 counted steps (setup + 2 post-setup samples), flagged so
-    pagerank_auto's phase 3 takes over."""
-    from simdgraphprocessing_spark.algorithms import pagerank_gather
+@pytest.mark.parametrize("join", ["broadcast", "shuffle_hash"])
+def test_gather_join_both_sides_of_threshold(spark, monkeypatch, join):
+    """One gather plan serves all three operators. Below the session's
+    broadcast threshold the V-sized state is broadcast and the
+    superstep has a single shuffle exchange (the aggregate's); with the
+    threshold set one byte below V·16 B the state join is a shuffled
+    hash join. Either way the answers match the oracles."""
+    import importlib
 
-    pairs = zipf_random_pairs(n=120)
-    e = spark.createDataFrame(pairs, "src long, dst long")
-    res = pagerank_gather(
-        e,
-        max_iterations=8,
-        tol=0.0,
-        step_timeout_sec=1e9,
-        sustained_budget_sec=0.0,
-    )
-    assert res.iterations == 3
-    assert res.metrics[-1]["sustained_exceeded"] is True
-    assert res.metrics[-1]["timeout_exceeded"] is True
-    assert not any("sustained_exceeded" in m for m in res.metrics[:-1])
+    from simdgraphprocessing_spark.iteration import STATE_ROW_BYTES
+
+    pairs = zipf_random_pairs(n=150)
+    verts = sorted({v for p in pairs for v in p})
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    default = spark.conf.get(key)
+    if join == "shuffle_hash":
+        spark.conf.set(key, str(STATE_ROW_BYTES * len(verts) - 1))
+    threshold = int(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold())
+
+    plans: list[str] = []
+
+    def spy(module_name):
+        module = importlib.import_module(module_name)
+        real = module.gather
+
+        def wrapped(*args, **kwargs):
+            df = real(*args, **kwargs)
+            plans.append(_explain(df))
+            return df
+
+        monkeypatch.setattr(module, "gather", wrapped)
+
+    for name in ("pagerank", "components", "labelprop"):
+        spy(f"simdgraphprocessing_spark.algorithms.{name}")
+    try:
+        directed = spark.createDataFrame(pairs, "src long, dst long")
+        n = max(max(p) for p in pairs) + 1
+        A_dir = np.zeros((n, n), dtype=np.int64)
+        for a, b in pairs:
+            A_dir[a, b] = 1
+        pr = pagerank(directed, max_iterations=25, tol=1e-12)
+        got = {r["id"]: r["rank"] for r in pr.state.collect()}
+        expect = pagerank_oracle(A_dir, iters=25, tol=1e-12)
+        assert sorted(got) == verts
+        assert np.allclose([got[v] for v in verts], expect[verts], rtol=1e-6, atol=0.0)
+
+        e = edge_df(spark, pairs)
+        cc = connected_components(e, max_iterations=60)
+        oracle = cc_oracle(pairs, n)
+        assert {r["id"]: r["component"] for r in cc.state.collect()} == {v: oracle[v] for v in verts}
+        # one superstep too: after four, hub labels have swept the graph,
+        # which hides a wrong vote rule
+        lps = [label_propagation(e, max_iterations=k) for k in (1, 4)]
+        for lp, k in zip(lps, (1, 4)):
+            lp_expect = lpa_oracle(numpy_graph(pairs), k)
+            assert {r["id"]: r["label"] for r in lp.state.collect()} == {v: lp_expect[v] for v in verts}
+    finally:
+        spark.conf.set(key, default)
+
+    for res in (pr, cc, *lps):
+        assert res.metrics
+        for m in res.metrics:
+            assert m["join"] == join
+            assert m["state_bytes"] == STATE_ROW_BYTES * len(verts)
+            assert m["broadcast_threshold"] == threshold
+    assert len(plans) == sum(res.iterations for res in (pr, cc, *lps))
+    for txt in plans:
+        if join == "broadcast":
+            assert "BroadcastHashJoin" in txt and "ShuffledHashJoin" not in txt
+            assert txt.count("Exchange hashpartitioning") == 1, txt
+        else:
+            assert "ShuffledHashJoin" in txt and "BroadcastHashJoin" not in txt
 
 
-def test_pagerank_auto_records_sustained_budget(spark):
-    """The probe log carries both yardsticks: the catastrophic
-    per-step budget (x median probe wall) and the sustained budget
-    (x min probe wall), with sustained <= per-step by construction."""
-    from simdgraphprocessing_spark.algorithms import pagerank_auto
-
-    pairs = zipf_random_pairs(n=120)
-    e = edge_df(spark, pairs)
-    res = pagerank_auto(
-        e, max_iterations=12, tol=0.0, min_gather_amortization_iters=1
-    )
-    probe = res.strategy_probe
-    assert probe["gather_sustained_budget_sec"] is not None
-    assert (
-        probe["gather_sustained_budget_sec"]
-        <= probe["gather_step_budget_sec"] + 1e-9
-    )
-    base = pagerank(e, max_iterations=12, tol=0.0)
-    got = {r["id"]: r["rank"] for r in res.state.collect()}
-    exp = {r["id"]: r["rank"] for r in base.state.collect()}
-    assert all(abs(got[i] - exp[i]) < 1e-9 for i in got)
+def test_converged_superstep_is_durable(spark, tmp_path):
+    """A run that converges between every-2 checkpoints still leaves
+    its converged superstep on disk, so a rerun returns at once."""
+    # a triangle: [0,1,2] -> [1,0,0] -> [0,0,0] -> no change at step 3
+    e = edge_df(spark, [(0, 1), (1, 2), (0, 2)])
+    ck = str(tmp_path / "lp_ck")
+    res = label_propagation(e, max_iterations=10, checkpoint_dir=ck, checkpoint_every=2)
+    assert res.iterations == 3 and res.metrics[-1]["changed"] == 0
+    assert last_complete_superstep(ck) == res.iterations
+    again = label_propagation(e, max_iterations=10, checkpoint_dir=ck, checkpoint_every=2)
+    assert again.resumed_from == res.iterations
+    assert again.iterations == res.iterations
+    assert [m["superstep"] for m in again.metrics] == [1, 2, 3]
+    assert {r["id"]: r["label"] for r in again.state.collect()} == {0: 0, 1: 0, 2: 0}
